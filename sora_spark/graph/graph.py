@@ -8,9 +8,11 @@ Spark-first:
 
 - one-shot ops are joins + aggregations (Catalyst plans them; the
   self-join shuffles on the join key and AQE picks broadcast vs SMJ);
-- fixpoint ops (connected components) are a driver-side loop where
-  EVERY iteration ends in `localCheckpoint(eager=True)` — without the
-  lineage cut the plan tree grows exponentially and the optimizer
+- fixpoint ops (connected components, the reduction loops, ...) are
+  round closures run by ONE driver, `Graph._fixpoint`, which owns the
+  round count and the non-convergence contract (raise, never a
+  partial answer); every round ends in a lineage cut (`Graph._cut`) —
+  without it the plan tree grows exponentially and the optimizer
   stalls (SURVEY §4.3, the classic failure mode of DataFrame graph
   code).
 
@@ -23,10 +25,16 @@ synchronization barrier of label propagation).
 from __future__ import annotations
 
 import gc
-from dataclasses import dataclass
+import itertools
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ByteType, DecimalType, IntegerType, LongType, ShortType
+
+# Long.MaxValue: the largest size estimate that still carries information
+# (see Graph._cut)
+_MAX_SIZE_ESTIMATE = (1 << 63) - 1
 
 
 @dataclass
@@ -60,41 +68,84 @@ class Graph:
     vertices: DataFrame | None = None
     reliable_checkpoint_dir: str | None = None
 
-    def _cp(self, df: DataFrame) -> DataFrame:
-        """The per-round lineage cut every fixpoint in this class uses
-        (via `.transform(self._cp)` so call sites stay postfix).
-        Local by default; reliable when the Graph was built with
-        `reliable_checkpoint_dir` (see class docstring for the
-        executor-loss trade)."""
-        if self.reliable_checkpoint_dir is None:
-            return df.localCheckpoint(eager=True)
-        sc = df.sparkSession.sparkContext
-        # setCheckpointDir once per context/dir, not per round — it
-        # round-trips to the JVM and mkdirs the path every call
-        if getattr(sc, "_sora_ckpt_dir", None) != self.reliable_checkpoint_dir:
-            sc.setCheckpointDir(self.reliable_checkpoint_dir)
-            sc._sora_ckpt_dir = self.reliable_checkpoint_dir
-        return df.checkpoint(eager=True)
+    def _cut(self, df: DataFrame, eager: bool) -> DataFrame:
+        """The one lineage cut in this class. Local by default;
+        reliable when the Graph was built with `reliable_checkpoint_dir`
+        (see the class docstring for the executor-loss trade).
 
-    def _cp_lazy(self, df: DataFrame) -> DataFrame:
-        """Lineage cut WITHOUT the eager materialization job, for call
-        sites whose very next statement is an action (count/agg) over
-        the cut frame: the action materializes the checkpoint blocks
-        as it aggregates, fusing what used to be two sequential jobs
-        per fixpoint round — a full materialize pass plus a cache-read
-        pass — into ONE pass (r14, guide §1.2: remove whole passes
-        before tuning inside them). Bit-identical data either way;
-        downstream consumers read the same cached/checkpointed blocks.
-        Reliable mode keeps the same contract: doCheckpoint() runs at
-        the end of that first action's job, exactly as it does after
-        the eager count."""
+        `eager=False` skips the separate materialization job: for call
+        sites whose next statement is an action over the cut frame,
+        that action writes the checkpoint blocks as it aggregates, so a
+        round costs one pass instead of a materialize pass plus a read
+        pass. Reliable mode keeps the same contract: doCheckpoint()
+        runs at the end of that first action's job. Same data either
+        way.
+
+        Spark keeps the pre-cut plan's size estimate on the cut, so a
+        self-join over a cut frame squares the estimate every round
+        (compact_chains' p ⋈ p) until planning itself stalls in
+        BigInteger arithmetic. An estimate past Long.MaxValue carries
+        no information, so it is dropped and Spark's own unknown-size
+        default (`spark.sql.defaultSizeInBytes`) stands in; every
+        smaller estimate, and so every plan, is unchanged."""
         if self.reliable_checkpoint_dir is None:
-            return df.localCheckpoint(eager=False)
-        sc = df.sparkSession.sparkContext
-        if getattr(sc, "_sora_ckpt_dir", None) != self.reliable_checkpoint_dir:
-            sc.setCheckpointDir(self.reliable_checkpoint_dir)
-            sc._sora_ckpt_dir = self.reliable_checkpoint_dir
-        return df.checkpoint(eager=False)
+            cut = df.localCheckpoint(eager=eager)
+        else:
+            sc = df.sparkSession.sparkContext
+            # setCheckpointDir once per context/dir, not per round — it
+            # round-trips to the JVM and mkdirs the path every call
+            if getattr(sc, "_sora_ckpt_dir", None) != self.reliable_checkpoint_dir:
+                sc.setCheckpointDir(self.reliable_checkpoint_dir)
+                sc._sora_ckpt_dir = self.reliable_checkpoint_dir
+            cut = df.checkpoint(eager=eager)
+        plan = cut._jdf.logicalPlan()  # the cut's LogicalRDD
+        if plan.stats().sizeInBytes() <= _MAX_SIZE_ESTIMATE:
+            return cut
+        spark, jvm = cut.sparkSession, cut.sparkSession._jvm
+        plan = plan.copy(
+            plan.output(), plan.rdd(), plan.outputPartitioning(),
+            plan.outputOrdering(), plan.isStreaming(), plan.stream(),
+            spark._jsparkSession, jvm.scala.Option.empty(),
+            jvm.scala.Some(plan.constraints()),
+        )
+        ds = jvm.org.apache.spark.sql.classic.Dataset
+        return DataFrame(ds.ofRows(spark._jsparkSession, plan), spark)
+
+    def _fixpoint(self, op, step, state, max_iter, stats=None, key="rounds"):
+        """The one driver every convergence loop in this class runs on.
+
+        `step(state, r)` runs round r (1-based) and returns
+        `(state, done, size)`, where `size` is a per-round figure the
+        round already computed (edge count, label mass, ...; None when
+        it computes none) — the driver itself never adds a Spark job.
+        The driver owns the round count (`stats[key]`), a driver GC
+        between rounds, and the one non-convergence contract: a loop that
+        has not reported `done` after `max_iter` rounds raises a
+        RuntimeError naming `op`, `max_iter` and the per-round sizes,
+        never a silently partial answer. `max_iter=None` is for loops
+        that terminate by construction. Returns `(state, sizes)`."""
+        sizes: list = []
+        rounds = itertools.count(1) if max_iter is None else range(1, max_iter + 1)
+        done, r = False, 0
+        for r in rounds:
+            state, done, size = step(state, r)
+            sizes.append(size)
+            if done:
+                break
+            # between rounds, nudge the driver GC so py4j refs to the
+            # previous round's checkpointed blocks release promptly —
+            # otherwise the ContextCleaner drops them at arbitrary times
+            # mid-run, which showed up as ~20% run-to-run bench variance
+            gc.collect()
+        if stats is not None:
+            stats[key] = r
+        if not done:
+            raise RuntimeError(
+                f"{op}: no fixpoint after max_iter={max_iter} rounds "
+                f"(per-round sizes {[x for x in sizes if x is not None]}); "
+                "raise max_iter — a partial answer is not returned"
+            )
+        return state, sizes
 
     # ---- basic structure -------------------------------------------------
 
@@ -160,19 +211,25 @@ class Graph:
         a scalar sum. Same scalar, verified against two_hop_count_join
         (tests/test_graph.py) and the unchanged brute-force oracle.
 
-        Single-pass shape (r14): the r06 form aggregated in-degrees
-        and out-degrees as two SEPARATE groupBys joined on the vertex
-        — but the edge plan does not canonicalize across the two
-        consumers when it carries lambda expressions (e_co's pair
-        expansion), so the WHOLE upstream derivation ran twice with no
-        ReusedExchange (bench q9 plan, plans/r14/). Exploding each
-        edge into (v=s, out) + (v=d, in) counts both directions in one
-        pass over one derivation: one edge-set read, one exchange on
-        v, no join. A vertex missing either side contributes i·o = 0 —
-        exactly the rows the old inner join dropped — so the scalar is
-        unchanged."""
-        deg = (
-            self.edges.select(
+        Single-pass degrees (`_io_degrees`): two separate in/out
+        groupBys joined on the vertex would run the WHOLE upstream
+        derivation twice when the edge plan carries lambda expressions
+        (e_co's pair expansion; no ReusedExchange, plans/r14/). A
+        vertex missing either side contributes i·o = 0."""
+        return self._io_degrees(self.edges).agg(
+            F.coalesce(F.sum(F.col("i") * F.col("o")), F.lit(0))
+            .cast("bigint")
+            .alias("two_hop_count")
+        )
+
+    @staticmethod
+    def _io_degrees(edges: DataFrame) -> DataFrame:
+        """(v, o, i) = out- and in-degree per vertex in ONE pass over
+        one derivation of the edges: each edge explodes into
+        (v=s, out) + (v=d, in), then one groupBy — one edge-set read,
+        one exchange on v, no join."""
+        return (
+            edges.select(
                 F.explode(
                     F.array(
                         F.struct(F.col("s").alias("v"), F.lit(1).alias("o")),
@@ -181,15 +238,27 @@ class Graph:
                 ).alias("e")
             )
             .groupBy(F.col("e.v").alias("v"))
-            .agg(
-                F.sum("e.o").alias("o"),
-                F.sum(1 - F.col("e.o")).alias("i"),
-            )
+            .agg(F.sum("e.o").alias("o"), F.sum(1 - F.col("e.o")).alias("i"))
         )
-        return deg.agg(
-            F.coalesce(F.sum(F.col("i") * F.col("o")), F.lit(0))
-            .cast("bigint")
-            .alias("two_hop_count")
+
+    @staticmethod
+    def _triangles(e: DataFrame) -> DataFrame:
+        """(a, b, c) for every a→b→c wedge closed by a→c — on
+        canonical (s < d) edges, each triangle once. Join order keeps
+        the small closing probe last; candidate wedges are bounded by
+        per-vertex degree."""
+        e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
+        return (
+            e1.join(e2, F.col("e1.d") == F.col("e2.s"))
+            .join(
+                e3,
+                (F.col("e1.s") == F.col("e3.s")) & (F.col("e2.d") == F.col("e3.d")),
+            )
+            .select(
+                F.col("e1.s").alias("a"),
+                F.col("e1.d").alias("b"),
+                F.col("e2.d").alias("c"),
+            )
         )
 
     def two_hop_count_join(self) -> DataFrame:
@@ -203,27 +272,17 @@ class Graph:
 
     def triangle_count(self) -> DataFrame:
         """Triangles in canonical undirected edges: s < m < d closing
-        edge (s, d). Join order keeps the small closing probe last.
+        edge (s, d) (`_triangles`).
 
-        The edge frame is lazily cut first (r14): the three join sides
-        each re-derived the WHOLE upstream edge subplan — the qg3 plan
-        held three complete e_co derivations (three lineitem scans)
-        because exchange reuse never fires across the derivation's
-        lambda-bearing aggregate. With the cut, the first action
-        materializes the edges once and all three sides read blocks.
-        Graphs already checkpointed pay one redundant edge-block
-        write — vertex/edge-sized, dwarfed by the two removed
-        derivations everywhere it matters."""
-        e = self.edges.transform(self._cp_lazy)
-        e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
-        wedges = e1.join(e2, F.col("e1.d") == F.col("e2.s"))
-        return (
-            wedges.join(
-                e3,
-                (F.col("e1.s") == F.col("e3.s")) & (F.col("e2.d") == F.col("e3.d")),
-            )
-            .agg(F.count("*").alias("triangle_count"))
-        )
+        The edge frame is lazily cut first: without it the three join
+        sides each re-derive the whole upstream edge subplan (exchange
+        reuse never fires across a derivation's lambda-bearing
+        aggregate). With the cut, the first action materializes the
+        edges once and all three sides read blocks. Graphs already
+        checkpointed pay one redundant edge-block write — edge-sized,
+        dwarfed by the two removed derivations."""
+        e = self._cut(self.edges, eager=False)
+        return self._triangles(e).agg(F.count("*").alias("triangle_count"))
 
     # Edge sets under this row count get broadcast hints in the
     # reduction joins (~128 MB of (long, long) pairs — comfortably
@@ -285,40 +344,31 @@ class Graph:
         """Dead-end vertices: degree-1 vertices whose sole neighbor has
         degree >= hub_degree (assembly tip-trimming shape).
 
-        Single-aggregation shape (r14): a degree-1 vertex appears in
-        the (v, nbr) end list exactly once, so min(nbr) over its group
-        IS its sole neighbor — one groupBy over the exploded ends
-        yields degree AND neighbor together. The old form derived the
-        ends union twice (once for degrees, once to look the neighbor
-        back up) and shuffled the full end list a second time through
-        the d1⋈ends join: per trim round that was 4 edge-block reads
-        and an ends-sized join exchange; now it is 2 reads, one
-        exchange, and two vertex-sized (broadcast-able) filters. Tip
-        set identical: degree and sole-neighbor are computed over the
-        same multiset the join consumed.
+        Single-aggregation shape: a degree-1 vertex appears in the
+        (v, nbr) end list exactly once, so min(nbr) over its group IS
+        its sole neighbor — one groupBy over the exploded ends yields
+        degree AND neighbor together: per trim round 2 edge-block
+        reads, one exchange and two vertex-sized (broadcast-able)
+        filters.
 
-        The explicit null filter is load-bearing twice over: it
-        reproduces the old form's null semantics exactly (its inner
-        join on v dropped null-v rows, its semi join dropped null-nbr
-        rows — aggregate filters alone would keep a null-v group),
-        and it keeps the aggregate's two consumers' pushed predicates
-        identical. Even so, COLUMN PRUNING diverges the two subtrees
-        (the hub side drops min(nbr)), so Catalyst/AQE never reuse the
-        exchange — the vertex-sized aggregate is therefore cut with a
-        lazy checkpoint: the caller's first action over the tip set
-        materializes it once and both consumers read the same blocks
-        (O(V) block traffic replacing a second O(E) ends
-        derivation+exchange)."""
+        The explicit null filter is load-bearing twice over: null-v
+        and null-nbr ends are never tips (an aggregate filter alone
+        would keep a null-v group), and it keeps the aggregate's two
+        consumers' pushed predicates identical. Even so, COLUMN
+        PRUNING diverges the two subtrees (the hub side drops
+        min(nbr)), so Catalyst/AQE never reuse the exchange — the
+        vertex-sized aggregate is therefore cut lazily: the caller's
+        first action over the tip set materializes it once and both
+        consumers read the same blocks (O(V) block traffic replacing a
+        second O(E) ends derivation+exchange)."""
         # (v, nbr) ends are _sym_edges renamed — ONE derivation of the
-        # upstream edge subplan instead of one per union branch (r14;
-        # in the reduce/assembly loops the edges are checkpointed, so
-        # this also halves the per-round block re-reads)
+        # upstream edge subplan instead of one per union branch
         ends = self._sym_edges().select(
             F.col("s").alias("v"), F.col("d").alias("nbr")
         ).filter(F.col("v").isNotNull() & F.col("nbr").isNotNull())
         deg_nbr = ends.groupBy("v").agg(
             F.count("*").alias("degree"), F.min("nbr").alias("nbr")
-        ).transform(self._cp_lazy)
+        ).transform(self._cut, eager=False)
         d1 = deg_nbr.filter(F.col("degree") == 1).select("v", "nbr")
         hub = deg_nbr.filter(F.col("degree") >= hub_degree).select(
             F.col("v").alias("nbr")
@@ -332,8 +382,8 @@ class Graph:
         One-shot op (the loops use _bubble_removals): the edge frame is
         lazily cut first so the 2-path self-join's two sides read one
         materialized edge set instead of re-deriving the upstream
-        subplan per side (r14, the triangle_count treatment)."""
-        e = self.edges.transform(self._cp_lazy)
+        subplan per side (as in triangle_count)."""
+        e = self._cut(self.edges, eager=False)
         e1, e2 = e.alias("e1"), e.alias("e2")
         two_paths = (
             e1.join(e2, F.col("e1.d") == F.col("e2.s"))
@@ -356,34 +406,23 @@ class Graph:
     ) -> DataFrame:
         """Min-label propagation to fixpoint → (v, component) with
         component = min vertex id in the component (order-free, hence
-        deterministic). localCheckpoint per iteration cuts lineage.
-        O(diameter) rounds — see `connected_components_twophase` for the
-        O(log n) contraction variant. `stats` records {"rounds": k}.
+        deterministic). O(diameter) rounds — see
+        `connected_components_twophase` for the O(log n) contraction
+        variant. `stats` records {"rounds": k}; a graph whose diameter
+        exceeds max_iter raises (see `_fixpoint`).
         """
-        # one scan (r14): the union form derived the edge subplan once
-        # per direction, and vertex_ids() re-derived it twice more —
-        # four full upstream derivations before round 1. _sym_edges
-        # builds sym in ONE derivation, and labels come from the
-        # CHECKPOINTED sym blocks (every vertex appears as sym.s —
+        # _sym_edges builds sym in ONE derivation, and labels come from
+        # the CHECKPOINTED sym blocks (every vertex appears as sym.s —
         # each edge contributes both directions), so the edge
-        # derivation now runs exactly once per CC call. The labels
-        # distinct reuses sym's hashpartitioning(s) — no new exchange.
-        # lazy cuts: the first mass/convergence action below (or round
-        # 1's, for sym) materializes the blocks — see _cp_lazy (r14)
-        sym = self._sym_edges().repartition("s").transform(self._cp_lazy)
-        labels = (
+        # derivation runs exactly once per CC call. The labels distinct
+        # reuses sym's hashpartitioning(s) — no new exchange. Lazy
+        # cuts: round 1's mass/convergence action materializes them.
+        sym = self._cut(self._sym_edges().repartition("s"), eager=False)
+        labels = self._cut(
             sym.select(F.col("s").alias("v"))
             .distinct()
-            .select(F.col("v"), F.col("v").alias("component"))
-            .transform(self._cp_lazy)
-        )
-
-        from pyspark.sql.types import (
-            ByteType,
-            DecimalType,
-            IntegerType,
-            LongType,
-            ShortType,
+            .select(F.col("v"), F.col("v").alias("component")),
+            eager=False,
         )
 
         # Mass-based convergence (equal decimal sum ⟺ no label changed)
@@ -391,8 +430,8 @@ class Graph:
         # integral types only.  Fractional ids (float/double, decimal
         # with scale>0) would round under the cast, so sub-integer label
         # movement could leave the rounded mass unchanged and declare a
-        # false fixpoint (ADVICE r06) — those fall back to the exact
-        # comparison join, same as string ids.
+        # false fixpoint — those fall back to the exact comparison
+        # join, same as string ids.
         _ctype = labels.schema["component"].dataType
         numeric_ids = isinstance(
             _ctype, (ByteType, ShortType, IntegerType, LongType)
@@ -400,12 +439,10 @@ class Graph:
 
         def _label_mass(lab):
             # exact decimal sum — labels only DECREASE under min-
-            # propagation, so equal mass ⟺ no label changed; this
-            # replaces the per-round full label-set comparison JOIN
-            # with one aggregate scan (change-set-first economics,
-            # SCALE.md). Decimal(38) so huge vertex ids cannot wrap.
-            # Only sound for NUMERIC ids — string-labelled graphs
-            # (e.g. qer1 entity names) keep the exact comparison join.
+            # propagation, so equal mass ⟺ no label changed; one
+            # aggregate scan instead of a full label-set comparison
+            # join (change-set-first economics, SCALE.md). Decimal(38)
+            # so huge vertex ids cannot wrap.
             return lab.agg(
                 F.sum(F.col("component").cast("decimal(38,0)"))
             ).collect()[0][0]
@@ -418,38 +455,34 @@ class Graph:
                 .count()
             )
 
-        mass = _label_mass(labels) if numeric_ids else None
-        rounds = 0
-        for _ in range(max_iter):
+        def _round(state, r):
+            labels, mass = state
             # candidate label per vertex = min over neighbors' labels
             nbr_min = (
                 sym.join(labels, sym.s == labels.v)
                 .groupBy(F.col("d").alias("v"))
                 .agg(F.min("component").alias("nbr_component"))
             )
-            new_labels = (
-                labels.join(nbr_min, "v", "left")
-                .select(
+            new_labels = self._cut(
+                labels.join(nbr_min, "v", "left").select(
                     "v",
                     F.least(
                         F.col("component"),
                         F.coalesce(F.col("nbr_component"), F.col("component")),
                     ).alias("component"),
-                )
-                .transform(self._cp_lazy)
+                ),
+                eager=False,
             )
             if numeric_ids:
                 new_mass = _label_mass(new_labels)
-                done = new_mass == mass
-                mass = new_mass
-            else:
-                done = _changed(new_labels, labels) == 0
-            labels = new_labels
-            rounds += 1
-            if done:
-                break
-        if stats is not None:
-            stats["rounds"] = rounds
+                return (new_labels, new_mass), new_mass == mass, new_mass
+            changed = _changed(new_labels, labels)
+            return (new_labels, None), changed == 0, changed
+
+        mass = _label_mass(labels) if numeric_ids else None
+        (labels, _), _ = self._fixpoint(
+            "connected_components", _round, (labels, mass), max_iter, stats
+        )
         return labels
 
     def connected_components_twophase(
@@ -467,37 +500,33 @@ class Graph:
         chains. Same output contract, same qg4 oracle; `stats` (if
         given) records {"rounds": k} for the round-count comparison.
         """
-        verts = self.vertex_ids().transform(self._cp_lazy)
-        e = (
+        verts = self._cut(self.vertex_ids(), eager=False)
+        e = self._cut(
             self.edges.select("s", "d")
             .filter(F.col("s") != F.col("d"))
             .select(
                 F.greatest("s", "d").alias("u"), F.least("s", "d").alias("v")
             )
-            .distinct()
-            .transform(self._cp_lazy)
+            .distinct(),
+            eager=False,
         )
-        rounds = 0
-        converged = False
 
         def _edge_sig_n(df):
             # order-insensitive exact-decimal sum of per-edge hashes:
             # equal signatures make set equality overwhelmingly likely,
-            # and the ONE exact subtract below confirms it — so the
-            # per-round full set-difference the loop used to pay
-            # becomes a single aggregate scan per round plus one
-            # confirm at the fixpoint (change-set-first economics,
-            # SCALE.md). Count rides the SAME aggregate (r14): one job
-            # per round where the loop used to run two, and that job
-            # also materializes the round's lazy checkpoint.
+            # and the ONE exact subtract below confirms it — a single
+            # aggregate scan per round plus one confirm at the fixpoint
+            # instead of a per-round set difference (change-set-first
+            # economics, SCALE.md). The count rides the SAME aggregate,
+            # whose job also materializes the round's lazy checkpoint.
             row = df.agg(
                 F.count(F.lit(1)),
                 F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
             ).collect()[0]
             return row[0], row[1]
 
-        n_prev, sig = _edge_sig_n(e)
-        for _ in range(max_iter):
+        def _round(state, r):
+            e, n_prev, sig = state
             # large-star: every neighbor v > u links to min(Γ(u) ∪ {u})
             sym = e.select("u", "v").union(
                 e.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -516,34 +545,26 @@ class Graph:
             # small-star: edges already orient u > v; all smaller
             # neighbors (and u) link to the minimum
             m2 = e1.groupBy("u").agg(F.min("v").alias("m"))
-            e2 = (
+            e2 = self._cut(
                 e1.join(m2, "u")
                 .filter(F.col("v") != F.col("m"))
                 .select(F.col("v").alias("u"), F.col("m").alias("v"))
                 .union(m2.select("u", F.col("m").alias("v")))
-                .distinct()
-                .transform(self._cp_lazy)
+                .distinct(),
+                eager=False,
             )
-            rounds += 1
             n2, sig2 = _edge_sig_n(e2)
-            if (
+            done = (
                 n2 == n_prev
                 and sig2 == sig
                 and e2.subtract(e).isEmpty()  # exact confirm, runs once
-            ):
-                e = e2
-                converged = True
-                break
-            e = e2
-            sig, n_prev = sig2, n2
-        if stats is not None:
-            stats["rounds"] = rounds
-        if not converged:
-            raise RuntimeError(
-                f"connected_components_twophase did not reach the "
-                f"star-forest fixpoint in max_iter={max_iter} rounds; "
-                f"raise max_iter (rounds are O(log n))"
             )
+            return (e2, n2, sig2), done, n2
+
+        (e, _, _), _ = self._fixpoint(
+            "connected_components_twophase", _round, (e, *_edge_sig_n(e)),
+            max_iter, stats,
+        )
         # at fixpoint e is a star forest: (vertex, component-min) pairs
         labels = e.groupBy("u").agg(F.min("v").alias("component")).select(
             F.col("u").alias("v"), "component"
@@ -558,22 +579,24 @@ class Graph:
         hop = min #edges from any source (≤ max_hops). Frontier
         iteration: each round is one join + one anti-join, frontier
         checkpointed to cut lineage; rounds = graph diameter."""
-        sym = self._sym_edges().transform(self._cp)
-        dist = sources.select(F.col("v"), F.lit(0).alias("hop")).transform(self._cp)
+        sym = self._cut(self._sym_edges(), eager=True)
+        dist = self._cut(
+            sources.select(F.col("v"), F.lit(0).alias("hop")), eager=True
+        )
         frontier = dist.select("v")
         for h in range(1, max_hops + 1):
-            nxt = (
+            nxt = self._cut(
                 frontier.join(sym, frontier.v == sym.s)
                 .select(F.col("d").alias("v"))
                 .distinct()
-                .join(dist.select("v"), "v", "left_anti")
-                .transform(self._cp)
+                .join(dist.select("v"), "v", "left_anti"),
+                eager=True,
             )
             if nxt.isEmpty():
                 break
-            dist = dist.union(
-                nxt.select("v", F.lit(h).alias("hop"))
-            ).transform(self._cp)
+            dist = self._cut(
+                dist.union(nxt.select("v", F.lit(h).alias("hop"))), eager=True
+            )
             frontier = nxt
         return dist
 
@@ -584,11 +607,12 @@ class Graph:
         stats: dict | None = None,
     ) -> DataFrame:
         """The SORA-shaped overlap-reduction loop: alternately remove
-        transitive edges and trim tips until a fixpoint (or max_iter).
-        Returns the surviving edge set. Each round = two bounded join
-        passes + a checkpoint; the convergence count() is the
-        per-round barrier (SURVEY §3.4). `stats` (if given) records
-        {"rounds": k, "edge_counts": [n0, n1, ...]}.
+        transitive edges and trim tips until a fixpoint; raises if
+        max_iter rounds do not reach it (see `_fixpoint`). Returns the
+        surviving edge set. Each round = two bounded join passes + a
+        checkpoint; the convergence count() is the per-round barrier
+        (SURVEY §3.4). `stats` (if given) records {"rounds": k,
+        "edge_counts": [n0, n1, ...]}.
 
         The 2-path transitive-removal join — the loop's dominant cost —
         runs ONLY in round 1: removal can destroy 2-paths but never
@@ -599,33 +623,30 @@ class Graph:
         removed — contradiction). Rounds >= 2 are pure tip-trims, and
         the unrolled oracles (which re-apply the transitive stage every
         round) still match exactly because that stage is the identity
-        from round 2 on. Measured round 6 (clean host, median-of-3
-        warm at sf0.1): bench q10 10.3s (r05 driver record) -> 8.1s;
-        output verified byte-identical to the alternating loop on
-        e_co_small and the read-overlap graph at sf0.001/0.01."""
-        edges = self.edges.transform(self._cp_lazy)
-        prev = edges.count()
-        # MEASURED AND REJECTED (r15): flooring the checkpointed edge
-        # blocks at the core count (the q15 _parallelize_candidates
-        # recipe) widened the 2-path stage from ~10 to 32 tasks and
-        # looked faster in isolation (7.9 -> 5.7 s wall), but task CPU
-        # DOUBLED (round: 30 -> 62 s; whole pipeline: 40 -> 117 s,
-        # q11 wall 6.3 -> 10.5 s) — each extra task re-pays a
-        # broadcast-relation deserialization proportional to the
-        # 1.2M-edge build side, so per-task overhead here scales with
-        # the broadcast size, not a constant. AQE's coalescing of the
-        # edge shuffle is protecting CPU, not wasting width; the q15
-        # floor remains correct because its broadcast side is
-        # probe-sized (hundreds of rows), not edge-sized.
-        counts = [prev]
-        rounds = 0
-        for it in range(max_iter):
-            g = Graph(edges, reliable_checkpoint_dir=self.reliable_checkpoint_dir)
+        from round 2 on."""
+        edges = self._cut(self.edges, eager=False)
+        # MEASURED AND REJECTED: flooring the checkpointed edge blocks
+        # at the core count (the q15 _parallelize_candidates recipe)
+        # widened the 2-path stage from ~10 to 32 tasks and looked
+        # faster in isolation (7.9 -> 5.7 s wall), but task CPU DOUBLED
+        # (round: 30 -> 62 s; whole pipeline: 40 -> 117 s) — each extra
+        # task re-pays a broadcast-relation deserialization
+        # proportional to the 1.2M-edge build side, so per-task
+        # overhead here scales with the broadcast size, not a constant.
+        # AQE's coalescing of the edge shuffle is protecting CPU, not
+        # wasting width; the q15 floor remains correct because its
+        # broadcast side is probe-sized (hundreds of rows), not
+        # edge-sized.
+        n0 = edges.count()
+
+        def _round(state, r):
+            edges, prev = state
+            g = replace(self, edges=edges)
             # seed the broadcast gate with the count the loop already
             # paid for — a fresh Graph would otherwise re-count the
-            # checkpointed edge set (one redundant job per round, r14)
+            # checkpointed edge set (one redundant job per round)
             object.__setattr__(g, "_n_edges", prev)
-            if it == 0:
+            if r == 1:
                 # checkpoint the reduced edges BEFORE the tip trim: the
                 # trim plan references this subplan several times (edge
                 # stream + degree/tip derivation), and only the input
@@ -633,59 +654,44 @@ class Graph:
                 # ReusedExchange'd, so without the cut the round's
                 # heaviest join runs 3-4x. Lazy cut: the tips count job
                 # below materializes it (block-level locks serialize
-                # concurrent first readers), saving the separate
-                # materialize pass (r14).
-                reduced = g.transitive_reduction_round().transform(self._cp_lazy)
+                # concurrent first readers).
+                reduced = self._cut(g.transitive_reduction_round(), eager=False)
             else:
                 reduced = edges
             # tips-first convergence: the tip set is degree-1-bounded
             # and TINY, so materialize it once — when it is empty the
             # trim is the identity, so the round's anti-join + full
-            # edge-set checkpoint + count are skipped AND no confirm
-            # round is needed (the legacy loop paid an entire no-op
-            # trim round to learn n == prev; measured at sf0.1 this
-            # cut bench q10 from 11.6 s to 8.8 s warm). Fixpoint edge
-            # set is identical; `rounds`/`edge_counts` now stop at the
-            # detection round instead of appending the duplicate
-            # confirm entry.
-            tips = (
-                Graph(reduced,
-                      reliable_checkpoint_dir=self.reliable_checkpoint_dir)
-                .tips(hub_degree=hub_degree)
-                .transform(self._cp_lazy)
+            # edge-set checkpoint + count are skipped and no confirm
+            # round is needed. `rounds`/`edge_counts` stop at the
+            # detection round.
+            tips = self._cut(
+                replace(self, edges=reduced).tips(hub_degree=hub_degree),
+                eager=False,
             )
-            rounds += 1
             if tips.count() == 0:
-                edges = reduced
-                counts.append(edges.count() if it == 0 else prev)
-                break
-            edges = self._trim_with_tips(
-                reduced, tips, g._bc(None)
-            ).transform(self._cp_lazy)
+                n = reduced.count() if r == 1 else prev
+                return (reduced, n), True, n
+            edges = self._cut(
+                self._trim_with_tips(reduced, tips, g._bc(None)), eager=False
+            )
             n = edges.count()
-            # nudge the driver GC so py4j refs to the PREVIOUS round's
-            # checkpointed blocks release promptly — otherwise the
-            # ContextCleaner drops them at arbitrary times mid-run,
-            # which showed up as ~20% run-to-run bench variance
-            gc.collect()
-            counts.append(n)
-            if n == prev:
-                break
-            prev = n
+            return (edges, n), n == prev, n
+
+        (edges, _), counts = self._fixpoint(
+            "reduce_pipeline", _round, (edges, n0), max_iter, stats
+        )
         if stats is not None:
-            stats["rounds"] = rounds
-            stats["edge_counts"] = counts
+            stats["edge_counts"] = [n0, *counts]
         return edges
 
-    @staticmethod
-    def _trim_tips(edges: DataFrame, hub_degree: int, bc: bool) -> DataFrame:
+    def _trim_tips(self, edges: DataFrame, hub_degree: int, bc: bool) -> DataFrame:
         """Remove edges touching a tip vertex. The tip set is bounded by
         the degree-1 vertex count, far under the edge count, so under
         the broadcast gate BOTH anti-joins are broadcast hash joins in
         one whole-stage-codegen pass over the edges — the per-round
-        trim never shuffles the edge set (was: two shuffled anti-joins)."""
-        tips = Graph(edges).tips(hub_degree=hub_degree)
-        return Graph._trim_with_tips(edges, tips, bc)
+        trim never shuffles the edge set."""
+        tips = replace(self, edges=edges).tips(hub_degree=hub_degree)
+        return self._trim_with_tips(edges, tips, bc)
 
     @staticmethod
     def _trim_with_tips(edges: DataFrame, tips: DataFrame, bc: bool) -> DataFrame:
@@ -723,25 +729,22 @@ class Graph:
         so callers can materialize it to TEST for convergence before
         paying the edge-set anti-join (the assembly loop does).
 
-        Single-derivation shape (r14, the tips()/band-keys finding):
-        the 2-path stream — the round's dominant cost — is derived
-        ONCE and aggregated straight to the doomed-mid set via
-        collect_set: per (u, w), mids = the distinct x set, keep =
-        array_min(mids), doomed = explode(mids \\ keep). The old form
-        aggregated tp to (u, w, keep) and then RE-DERIVED tp to probe
-        it against that table — the Σ in(v)·out(v) join ran once per
-        consumer (the aggregation plus each union branch; only the
-        input exchanges get reused). Per-row memory is one distinct-
-        mid set per bubble pair — linear in min(out(u), in(w)), the
-        same bound the old countDistinct paid inside its aggregation
-        buffer, never the k²/2 pair expansion rejected for qd5. The
+        Single-derivation shape: the 2-path stream — the round's
+        dominant cost — is derived ONCE and aggregated straight to the
+        doomed-mid set via collect_set: per (u, w), mids = the
+        distinct x set, keep = array_min(mids), doomed = explode(mids
+        \\ keep). Probing the 2-paths against a (u, w, keep) table
+        instead would run the Σ in(v)·out(v) join once per consumer
+        (only input exchanges get reused). Per-row memory is one
+        distinct-mid set per bubble pair — linear in min(out(u),
+        in(w)), never the k²/2 pair expansion rejected for qd5. The
         doomed set is lazily cut (bubble-bounded, tiny) so the union's
         two branches read blocks instead of re-aggregating.
 
-        The explicit null filter reproduces the old tp⋈bub probe
-        join's key semantics bit-exactly: a null u or w never matched
-        the (u, w) join key, so those 2-paths produced no removals;
-        x is a join key (e1.d = e2.s) and can never be null."""
+        The explicit null filter pins the (u, w) key semantics: a
+        null u or w is never a bubble pair, so those 2-paths produce
+        no removals; x is a join key (e1.d = e2.s) and can never be
+        null."""
         e1, e2 = self.edges.alias("e1"), self.edges.alias("e2")
         doomed = (
             e1.join(e2, F.col("e1.d") == F.col("e2.s"))
@@ -761,7 +764,7 @@ class Graph:
                     F.array_remove(F.col("mids"), F.array_min(F.col("mids")))
                 ).alias("x"),
             )
-            .transform(self._cp_lazy)
+            .transform(self._cut, eager=False)
         )
         return (
             doomed.select(F.col("u").alias("s"), F.col("x").alias("d"))
@@ -779,8 +782,9 @@ class Graph:
         """The FULL SORA assembly reduction (SURVEY §0.3 steps 2-4 as
         staged fixpoints): (a) transitive-reduction + tip-trim loop to
         fixpoint (`reduce_pipeline`), then (b) bubble-pop loop to
-        fixpoint. Returns the surviving edge set; compaction (step 5)
-        runs on the result via `chain_edges` + `compact_chains`
+        fixpoint; each stage raises if max_iter rounds do not reach
+        its fixpoint. Returns the surviving edge set; compaction (step
+        5) runs on the result via `chain_edges` + `compact_chains`
         (qg17). Both stages only REMOVE edges, so an unrolled-SQL
         oracle with unroll >= rounds-to-fixpoint is exactly the
         fixpoint (qg11b argument, extended). Each bubble round is
@@ -790,38 +794,39 @@ class Graph:
         edges = self.reduce_pipeline(
             max_iter=max_iter, hub_degree=hub_degree, stats=rstats
         )
-        prev = rstats["edge_counts"][-1]
-        counts = list(rstats["edge_counts"])
-        bubble_rounds = 0
-        for _ in range(max_iter):
-            g = Graph(edges, reliable_checkpoint_dir=self.reliable_checkpoint_dir)
+
+        def _round(state, r):
+            edges, prev = state
+            g = replace(self, edges=edges)
             # seed the broadcast gate (see reduce_pipeline) — `prev`
             # is exactly this round's edge count
             object.__setattr__(g, "_n_edges", prev)
-            # removal-first convergence (same trick as the tips-first
-            # reduce loop): the removal set is bubble-bounded — when
-            # empty, skip the anti-join + full-edge checkpoint AND the
-            # legacy no-op confirm round
-            removal = g._bubble_removals(min_mids).transform(self._cp_lazy)
-            bubble_rounds += 1
+            # removal-first convergence (the tips-first trick of
+            # reduce_pipeline): the removal set is bubble-bounded — when
+            # empty, skip the anti-join + full-edge checkpoint and the
+            # no-op confirm round
+            removal = self._cut(g._bubble_removals(min_mids), eager=False)
             if removal.count() == 0:
-                counts.append(prev)
-                break
-            edges = edges.join(
-                F.broadcast(removal) if g._bc(None) else removal,
-                ["s", "d"],
-                "left_anti",
-            ).transform(self._cp_lazy)
+                return state, True, prev
+            edges = self._cut(
+                edges.join(
+                    F.broadcast(removal) if g._bc(None) else removal,
+                    ["s", "d"],
+                    "left_anti",
+                ),
+                eager=False,
+            )
             n = edges.count()
-            gc.collect()  # release prior round's checkpoint blocks
-            counts.append(n)
-            if n == prev:
-                break
-            prev = n
+            return (edges, n), n == prev, n
+
+        (edges, _), counts = self._fixpoint(
+            "assembly_pipeline (bubble loop)", _round,
+            (edges, rstats["edge_counts"][-1]), max_iter, stats,
+            key="bubble_rounds",
+        )
         if stats is not None:
             stats["reduce_rounds"] = rstats["rounds"]
-            stats["bubble_rounds"] = bubble_rounds
-            stats["edge_counts"] = counts
+            stats["edge_counts"] = rstats["edge_counts"] + counts
         return edges
 
     def chain_edges(self) -> DataFrame:
@@ -831,33 +836,14 @@ class Graph:
         the result is a union of simple paths — the precondition
         `compact_chains` needs.
 
-        One-pass degrees (r14, the two_hop_count/tips trick): the old
-        form aggregated out-degrees and in-degrees as two separate
-        groupBys — two edge scans, two exchanges. Exploding each edge
-        into (v=s, out) + (v=d, in) counts both directions in one pass
-        over one scan; the vertex-sized degree table is lazily cut
-        (column pruning diverges its two consumers, defeating exchange
-        reuse — the tips() finding) and both semi-joins filter it.
-        out-degree-1 set identical: a vertex absent from the s column
-        has outd = 0 and is excluded either way; same for in."""
-        deg = (
-            self.edges.select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("s").alias("v"), F.lit(1).alias("o")),
-                        F.struct(F.col("d").alias("v"), F.lit(0).alias("o")),
-                    )
-                ).alias("e")
-            )
-            .groupBy(F.col("e.v").alias("v"))
-            .agg(
-                F.sum("e.o").alias("outd"),
-                F.sum(1 - F.col("e.o")).alias("ind"),
-            )
-            .transform(self._cp_lazy)
-        )
-        out1 = deg.filter(F.col("outd") == 1).select(F.col("v").alias("s"))
-        in1 = deg.filter(F.col("ind") == 1).select(F.col("v").alias("d"))
+        One-pass degrees (`_io_degrees`); the vertex-sized degree
+        table is lazily cut (column pruning diverges its two consumers,
+        defeating exchange reuse — see tips()) and both semi-joins
+        filter it. A vertex absent from the s column has outd = 0 and
+        is never in the out-degree-1 set; same for in."""
+        deg = self._cut(self._io_degrees(self.edges), eager=False)
+        out1 = deg.filter(F.col("o") == 1).select(F.col("v").alias("s"))
+        in1 = deg.filter(F.col("i") == 1).select(F.col("v").alias("d"))
         return (
             self.edges.join(out1, "s", "left_semi")
             .join(in1, "d", "left_semi")
@@ -868,12 +854,15 @@ class Graph:
         """Exactly `n_rounds` of the reduction loop body, NO convergence
         check — the SQL-expressible (unrollable) twin of
         `reduce_pipeline`, used by the oracle-checked qg11."""
-        edges = self.edges.transform(self._cp)
+        edges = self._cut(self.edges, eager=True)
         for _ in range(n_rounds):
-            g = Graph(edges, reliable_checkpoint_dir=self.reliable_checkpoint_dir)
-            edges = self._trim_tips(
-                g.transitive_reduction_round(), hub_degree, g._bc(None)
-            ).transform(self._cp)
+            g = replace(self, edges=edges)
+            edges = self._cut(
+                self._trim_tips(
+                    g.transitive_reduction_round(), hub_degree, g._bc(None)
+                ),
+                eager=True,
+            )
         return edges
 
     def k_core(self, k: int = 2, max_iter: int = 50) -> DataFrame:
@@ -881,28 +870,33 @@ class Graph:
         has degree ≥ k, undirected) → (v,). Iterative peeling: drop
         sub-k vertices, recompute degrees, repeat to fixpoint — each
         round is one groupBy + two semi-joins on a checkpointed,
-        shrinking edge set; rounds bounded by peeling depth."""
-        e = self._sym_edges().distinct().transform(self._cp)
-        for _ in range(max_iter):
+        shrinking edge set; rounds bounded by peeling depth. A partial
+        peel is NOT a k-core, so exhausting max_iter raises."""
+        e = self._cut(self._sym_edges().distinct(), eager=True)
+
+        def _round(e, r):
             deg = e.groupBy("s").agg(F.count("*").alias("_deg"))
             # change-set-first convergence (SCALE.md): peel only when
             # sub-k vertices EXIST — the drop set is vertex-bounded and
             # cheap to test, the skipped work is two semi-joins plus a
             # full edge checkpoint on the final (no-op) round
-            drop = deg.filter(F.col("_deg") < k).select("s").transform(self._cp)
-            if drop.count() == 0:
-                return e.select(F.col("s").alias("v")).distinct()
+            drop = self._cut(
+                deg.filter(F.col("_deg") < k).select("s"), eager=True
+            )
+            n_drop = drop.count()
+            if n_drop == 0:
+                return e, True, 0
             keep = deg.filter(F.col("_deg") >= k).select("s")
-            e = (
+            e = self._cut(
                 e.join(keep, "s", "left_semi")
                 .join(keep.withColumnRenamed("s", "d"), "d", "left_semi")
-                .select("s", "d")
-                .transform(self._cp)
+                .select("s", "d"),
+                eager=True,
             )
-        raise RuntimeError(
-            f"k_core: still peeling after max_iter={max_iter} rounds —"
-            " raise max_iter (a partial peel is NOT a k-core)"
-        )
+            return e, False, n_drop
+
+        e, _ = self._fixpoint("k_core", _round, e, max_iter)
+        return e.select(F.col("s").alias("v")).distinct()
 
     def maximal_matching(
         self, max_iter: int = 30, stats: dict | None = None
@@ -926,21 +920,21 @@ class Graph:
         on the shrinking edge set. Progress is guaranteed: the
         globally-minimal-hash edge is mutual every round. Maximality:
         the loop only stops when the residual edge set is empty."""
-        e = (
+        e = self._cut(
             self.edges.select(
                 F.least("s", "d").alias("s"), F.greatest("s", "d").alias("d")
             )
             .filter(F.col("s") != F.col("d"))
-            .distinct()
-            .transform(self._cp)
+            .distinct(),
+            eager=True,
         )
-        out: DataFrame | None = None
-        rounds = 0
-        for r in range(1, max_iter + 1):
-            rounds = r
-            if e.isEmpty():
-                rounds = r - 1
-                break
+        if e.isEmpty():
+            if stats is not None:
+                stats["rounds"] = 0
+            return e.select(F.col("s").alias("x"), F.col("d").alias("y"))
+
+        def _round(state, r):
+            e, out = state
             ph = F.md5(
                 F.concat_ws(
                     ":",
@@ -949,10 +943,8 @@ class Graph:
                     F.col("d").cast("string"),
                 )
             )
-            # one pass (r14): the union form scanned the checkpointed
-            # edge blocks once per branch and computed the per-edge md5
-            # TWICE (once per orientation); explode emits both
-            # orientations around ONE hash evaluation per edge
+            # explode emits both orientations around ONE hash
+            # evaluation per edge, over one scan of the edge blocks
             sym = e.select(
                 F.explode(
                     F.array(
@@ -972,43 +964,33 @@ class Graph:
                 .select("v", F.col("p.u").alias("u"))
             )
             a, b = cand.alias("a"), cand.alias("b")
-            newm = (
+            newm = self._cut(
                 a.join(
                     b,
                     (F.col("a.u") == F.col("b.v"))
                     & (F.col("b.u") == F.col("a.v")),
                 )
                 .filter(F.col("a.v") < F.col("a.u"))
-                .select(
-                    F.col("a.v").alias("x"), F.col("a.u").alias("y")
-                )
-                .transform(self._cp)
+                .select(F.col("a.v").alias("x"), F.col("a.u").alias("y")),
+                eager=True,
             )
-            out = newm if out is None else out.unionByName(newm)
-            out = out.transform(self._cp)
+            out = self._cut(
+                newm if out is None else out.unionByName(newm), eager=True
+            )
             mv = newm.select(F.col("x").alias("v")).union(
                 newm.select(F.col("y").alias("v"))
             )
-            e = (
+            e = self._cut(
                 e.join(mv.withColumnRenamed("v", "s"), "s", "left_anti")
                 .join(mv.withColumnRenamed("v", "d"), "d", "left_anti")
-                .select("s", "d")
-                .transform(self._cp)
+                .select("s", "d"),
+                eager=True,
             )
-        else:
-            # The for/else fires when the loop ran all max_iter rounds;
-            # the matching is still complete if the last round emptied
-            # the edge set (emptiness is only polled at round top).
-            if not e.isEmpty():
-                raise RuntimeError(
-                    f"maximal_matching: edges remain after max_iter={max_iter}"
-                )
-        if stats is not None:
-            stats["rounds"] = rounds
-        if out is None:
-            return e.select(
-                F.col("s").alias("x"), F.col("d").alias("y")
-            ).limit(0)
+            return (e, out), e.isEmpty(), None
+
+        (_, out), _ = self._fixpoint(
+            "maximal_matching", _round, (e, None), max_iter, stats
+        )
         return out
 
     def strongly_connected_components(
@@ -1034,19 +1016,19 @@ class Graph:
         at sf0.001/0.01/0.1 on the bounded lineitem digraph). Inner
         fixpoints reuse the CC shape: one join + min-aggregate per hop
         on a checkpointed shrinking edge set. `stats` records
-        {"rounds": outer+trim round count}."""
-        edges = self.edges.select("s", "d").filter(
-            F.col("s") != F.col("d")
-        ).distinct().transform(self._cp)
-        remaining = self.vertex_ids().transform(self._cp)
-        done: DataFrame | None = None
-        rounds = 0
+        {"rounds": total trim passes}."""
+        edges = self._cut(
+            self.edges.select("s", "d")
+            .filter(F.col("s") != F.col("d"))
+            .distinct(),
+            eager=True,
+        )
+        remaining = self._cut(self.vertex_ids(), eager=True)
+        trim_rounds: list[int] = []
 
         def _propagate(e, vs):
             # min-label to fixpoint along DIRECTED edges: lab(v) =
             # min(v, min over in-neighbors' labels)
-            lab = vs.select("v", F.col("v").alias("lab")).transform(self._cp)
-
             def _mass(df_):
                 # labels only decrease and are integral → equal decimal
                 # mass ⟺ fixpoint (same soundness argument as CC)
@@ -1054,118 +1036,110 @@ class Graph:
                     F.sum(F.col("lab").cast("decimal(38,0)"))
                 ).collect()[0][0]
 
-            m_old = _mass(lab)
-            for _ in range(max_iter * 4):
+            def _hop(state, r):
+                lab, m_old = state
                 nbr = (
                     e.join(lab, e.s == lab.v)
                     .groupBy(F.col("d").alias("v"))
                     .agg(F.min("lab").alias("nl"))
                 )
-                new = (
-                    lab.join(nbr, "v", "left")
-                    .select(
+                new = self._cut(
+                    lab.join(nbr, "v", "left").select(
                         "v",
                         F.least(
                             F.col("lab"), F.coalesce("nl", F.col("lab"))
                         ).alias("lab"),
-                    )
-                    .transform(self._cp)
+                    ),
+                    eager=True,
                 )
                 # carry the previous round's mass forward — one
                 # aggregate scan (barrier) per hop, not two
                 m_new = _mass(new)
-                lab = new
-                if m_old == m_new:
-                    return lab
-                m_old = m_new
-            raise RuntimeError("scc: label propagation did not converge")
+                return (new, m_new), m_old == m_new, m_new
 
-        def _emit(part):
-            nonlocal done
-            done = part if done is None else done.unionByName(part)
-            done = done.transform(self._cp)
+            lab = self._cut(vs.select("v", F.col("v").alias("lab")), eager=True)
+            (lab, _), _ = self._fixpoint(
+                "strongly_connected_components (label propagation)",
+                _hop, (lab, _mass(lab)), max_iter * 4,
+            )
+            return lab
 
-        for _ in range(max_iter):
-            # (a) trim loop: no-in or no-out vertices are singleton SCCs
-            while True:
-                rounds += 1
-                # core = vertices with BOTH an in- and an out-edge, in
-                # ONE pass over the checkpointed edges (r14 verdict
-                # item 5, the chain_edges/two_hop explode shape): each
-                # edge contributes (s, o=1) and (d, o=0), so max(o)=1
-                # ⟺ v has an out-edge and min(o)=0 ⟺ an in-edge —
-                # replaces two distinct-scans + a semi-join (two edge
-                # reads + three Exchanges) with one scan + one
-                # aggregation Exchange. Edge ends are null-free here
-                # (the s != d prefilter drops null-keyed rows), which
-                # is what made the old semi-join form equivalent; the
-                # isNotNull filter pins that invariant explicitly.
-                core = (
-                    edges.select(
-                        F.explode(
-                            F.array(
-                                F.struct(
-                                    F.col("s").alias("v"),
-                                    F.lit(1).alias("o"),
-                                ),
-                                F.struct(
-                                    F.col("d").alias("v"),
-                                    F.lit(0).alias("o"),
-                                ),
-                            )
-                        ).alias("e")
-                    )
-                    .select(F.col("e.v").alias("v"), F.col("e.o").alias("o"))
-                    .filter(F.col("v").isNotNull())
-                    .groupBy("v")
-                    .agg(F.max("o").alias("_o"), F.min("o").alias("_i"))
-                    .filter((F.col("_o") == 1) & (F.col("_i") == 0))
-                    .select("v")
-                    .transform(self._cp)
+        def _emit(out, part):
+            return self._cut(
+                part if out is None else out.unionByName(part), eager=True
+            )
+
+        def _trim(state, r):
+            # no-in or no-out vertices are singleton SCCs. core =
+            # vertices with BOTH an in- and an out-edge, in ONE pass
+            # over the checkpointed edges (`_io_degrees`). Edge ends are
+            # null-free here (the s != d prefilter drops null-keyed
+            # rows); the isNotNull filter pins that invariant explicitly.
+            edges, remaining, out = state
+            core = self._cut(
+                self._io_degrees(edges)
+                .filter(
+                    F.col("v").isNotNull() & (F.col("o") > 0) & (F.col("i") > 0)
                 )
-                triv = remaining.join(core, "v", "left_anti")
-                if triv.isEmpty():
-                    break
-                _emit(triv.select("v", F.col("v").alias("component")))
-                remaining = core
-                edges = (
-                    edges.join(core, edges.s == core.v, "left_semi")
-                    .join(core.withColumnRenamed("v", "d"), "d", "left_semi")
-                    .select("s", "d")
-                    .transform(self._cp)
-                )
-                if remaining.isEmpty():
-                    break
+                .select("v"),
+                eager=True,
+            )
+            triv = remaining.join(core, "v", "left_anti")
+            if triv.isEmpty():
+                return state, True, None
+            out = _emit(out, triv.select("v", F.col("v").alias("component")))
+            edges = self._cut(
+                edges.join(core, edges.s == core.v, "left_semi")
+                .join(core.withColumnRenamed("v", "d"), "d", "left_semi")
+                .select("s", "d"),
+                eager=True,
+            )
+            return (edges, core, out), core.isEmpty(), None
+
+        def _round(state, r):
+            # (a) trim to fixpoint: each pass that does not stop
+            # removes >= 1 vertex, so the trim terminates by construction
+            tstats: dict = {}
+            (edges, remaining, out), _ = self._fixpoint(
+                "strongly_connected_components (trim)", _trim, state, None,
+                tstats,
+            )
+            trim_rounds.append(tstats["rounds"])
             if remaining.isEmpty():
-                break
+                return (edges, remaining, out), True, None
             # (b) forward / backward min labels
             fwd = _propagate(edges, remaining).withColumnRenamed("lab", "f")
-            rev = edges.select(
-                F.col("d").alias("s"), F.col("s").alias("d")
-            )
+            rev = edges.select(F.col("d").alias("s"), F.col("s").alias("d"))
             bwd = _propagate(rev, remaining).withColumnRenamed("lab", "b")
             lab = fwd.join(bwd, "v")
             # (c) peel complete SCCs
-            peel = lab.filter(F.col("f") == F.col("b")).select(
-                "v", F.col("f").alias("component")
-            ).transform(self._cp)
-            _emit(peel)
-            remaining = remaining.join(peel, "v", "left_anti").transform(self._cp)
+            peel = self._cut(
+                lab.filter(F.col("f") == F.col("b")).select(
+                    "v", F.col("f").alias("component")
+                ),
+                eager=True,
+            )
+            out = _emit(out, peel)
+            remaining = self._cut(
+                remaining.join(peel, "v", "left_anti"), eager=True
+            )
             if remaining.isEmpty():
-                break
-            edges = (
+                return (edges, remaining, out), True, None
+            edges = self._cut(
                 edges.join(peel, edges.s == peel.v, "left_anti")
                 .join(peel.withColumnRenamed("v", "d"), "d", "left_anti")
-                .select("s", "d")
-                .transform(self._cp)
+                .select("s", "d"),
+                eager=True,
             )
-        else:
-            raise RuntimeError(
-                f"scc: not converged in max_iter={max_iter} outer rounds"
-            )
+            return (edges, remaining, out), False, None
+
+        (_, _, out), _ = self._fixpoint(
+            "strongly_connected_components", _round,
+            (edges, remaining, None), max_iter,
+        )
         if stats is not None:
-            stats["rounds"] = rounds
-        return done
+            stats["rounds"] = sum(trim_rounds)
+        return out
 
     def k_truss(
         self, k: int = 5, max_iter: int = 30, stats: dict | None = None
@@ -1181,42 +1155,25 @@ class Graph:
         wedge shape as triangle_count — candidate wedges bounded by
         per-vertex degree), charge each triangle to its three edges,
         drop edges with support < k−2, repeat to fixpoint. Change-set-
-        first convergence like k_core: the drop set is materialized
-        first and the round's anti-join + checkpoint are skipped when
-        it is empty. Rounds are bounded by peeling depth (measured:
-        ≤ 7 at sf0.001–0.1 for k=5 on the bounded co-occurrence
-        graph). `stats` records {"rounds": k}."""
-        e = (
+        first convergence like k_core: the drop set is tested first
+        and the round's filter + checkpoint are skipped when it is
+        empty. Rounds are bounded by peeling depth (measured: ≤ 7 at
+        sf0.001–0.1 for k=5 on the bounded co-occurrence graph); a
+        partial peel is NOT a k-truss, so exhausting max_iter raises.
+        `stats` records {"rounds": k}."""
+        e = self._cut(
             self.edges.select(
                 F.least("s", "d").alias("s"), F.greatest("s", "d").alias("d")
-            )
-            .distinct()
-            .transform(self._cp)
+            ).distinct(),
+            eager=True,
         )
-        rounds = 0
 
         def _support(cur):
-            e1, e2, e3 = cur.alias("e1"), cur.alias("e2"), cur.alias("e3")
-            tri = (
-                e1.join(e2, F.col("e1.d") == F.col("e2.s"))
-                .join(
-                    e3,
-                    (F.col("e1.s") == F.col("e3.s"))
-                    & (F.col("e2.d") == F.col("e3.d")),
-                )
-                .select(
-                    F.col("e1.s").alias("a"),
-                    F.col("e1.d").alias("b"),
-                    F.col("e2.d").alias("c"),
-                )
-            )
-            # one derivation (r14): the union-of-three-selects form ran
-            # the triangle-enumeration JOIN — the round's dominant cost
-            # — once per branch (no reuse across the differently-
-            # projected branches); exploding each triangle into its
-            # three edges charges the identical (s, d) multiset over
-            # ONE join
-            per_edge = tri.select(
+            # exploding each triangle into its three edges charges the
+            # (s, d) multiset over ONE triangle-enumeration join (a
+            # union of three projections would run the join — the
+            # round's dominant cost — once per branch)
+            per_edge = self._triangles(cur).select(
                 F.explode(
                     F.array(
                         F.struct(F.col("a").alias("s"), F.col("b").alias("d")),
@@ -1229,24 +1186,23 @@ class Graph:
                 F.count("*").alias("support")
             )
 
-        for _ in range(max_iter):
-            sup = _support(e)
-            scored = e.join(sup, ["s", "d"], "left").select(
-                "s", "d", F.coalesce("support", F.lit(0)).alias("support")
-            ).transform(self._cp)
-            rounds += 1
-            drop = scored.filter(F.col("support") < k - 2)
-            if drop.isEmpty():
-                if stats is not None:
-                    stats["rounds"] = rounds
-                return scored
-            e = scored.filter(F.col("support") >= k - 2).select(
-                "s", "d"
-            ).transform(self._cp)
-        raise RuntimeError(
-            f"k_truss: still peeling after max_iter={max_iter} rounds —"
-            " raise max_iter (a partial peel is NOT a k-truss)"
-        )
+        def _round(e, r):
+            scored = self._cut(
+                e.join(_support(e), ["s", "d"], "left").select(
+                    "s", "d", F.coalesce("support", F.lit(0)).alias("support")
+                ),
+                eager=True,
+            )
+            if scored.filter(F.col("support") < k - 2).isEmpty():
+                return scored, True, None
+            e = self._cut(
+                scored.filter(F.col("support") >= k - 2).select("s", "d"),
+                eager=True,
+            )
+            return e, False, None
+
+        scored, _ = self._fixpoint("k_truss", _round, e, max_iter, stats)
+        return scored
 
     def _power_iterate(self, verts, edges, out_deg, ranks, n_iter, update_fn):
         """Shared PageRank-family round loop: each round is one join
@@ -1287,7 +1243,7 @@ class Graph:
                         F.col("_dmass"), F.coalesce("c", F.lit(0.0))
                     ).alias("rank"),
                 )
-                .transform(self._cp)
+                .transform(self._cut, eager=True)
             )
         return ranks
 
@@ -1303,25 +1259,25 @@ class Graph:
 
         Each round is one join (rank → out-edges) + one groupBy (sum
         contributions at the destination) — the standard two-shuffle
-        PageRank dataflow; `localCheckpoint` per round keeps the plan
+        PageRank dataflow; a lineage cut per round keeps the plan
         flat. Dangling mass rides the same round as a broadcast 1-row
         aggregate (cross-join), so each round is exactly ONE action
         (the ranks checkpoint) — no separate driver-side scalar job."""
         # checkpoint the edge set and degree table once so the per-round
         # action never re-evaluates the full edge derivation; verts come
-        # from the CHECKPOINTED blocks (one upstream derivation total —
-        # the old vertex_ids()-first order paid a second one, r14)
-        edges = self.edges.select("s", "d").transform(self._cp)
+        # from the CHECKPOINTED blocks (one upstream derivation total;
+        # deriving them from self.edges would pay a second one)
+        edges = self.edges.select("s", "d").transform(self._cut, eager=True)
         verts = (
             edges.select(F.explode(F.array("s", "d")).alias("v"))
             .distinct()
-            .transform(self._cp)
+            .transform(self._cut, eager=True)
         )
         n_v = verts.count()
         out_deg = edges.groupBy("s").agg(
             F.count("*").alias("_od")
-        ).transform(self._cp)
-        ranks = verts.select("v", F.lit(1.0).alias("rank")).transform(self._cp)
+        ).transform(self._cut, eager=True)
+        ranks = verts.select("v", F.lit(1.0).alias("rank")).transform(self._cut, eager=True)
 
         # same float op order as the collected-scalar form:
         # ((1-d) + (d*D)/n) + d*c — keeps qg14's hash stable
@@ -1364,12 +1320,12 @@ class Graph:
                 "personalized_pagerank: seeds must be non-empty"
             )
         # edges first, verts from the CHECKPOINTED blocks — one
-        # upstream derivation instead of two (r14, the pagerank order)
-        edges = self.edges.select("s", "d").transform(self._cp)
+        # upstream derivation instead of two (the pagerank order)
+        edges = self.edges.select("s", "d").transform(self._cut, eager=True)
         verts = (
             edges.select(F.explode(F.array("s", "d")).alias("v"))
             .distinct()
-            .transform(self._cp)
+            .transform(self._cut, eager=True)
         )
         present = {
             r.v
@@ -1382,12 +1338,12 @@ class Graph:
             )
         out_deg = edges.groupBy("s").agg(
             F.count("*").alias("_od")
-        ).transform(self._cp)
+        ).transform(self._cut, eager=True)
         n_s = float(len(seeds))
         seed_ind = F.when(
             F.col("v").isin(list(seeds)), F.lit(1.0 / n_s)
         ).otherwise(F.lit(0.0))
-        ranks = verts.select("v", seed_ind.alias("rank")).transform(self._cp)
+        ranks = verts.select("v", seed_ind.alias("rank")).transform(self._cut, eager=True)
 
         # float op order fixed for the oracle hash:
         # s(v)*((1-d) + d*D) + d*c
@@ -1415,24 +1371,26 @@ class Graph:
         checked with one count() per round; each round is one join +
         one min-aggregation, checkpointed. Raises RuntimeError if
         max_iter rounds still improve distances (a silent truncation
-        would return plausible but incomplete/non-minimal rows)."""
+        would return plausible but incomplete/non-minimal rows; a path
+        graph needs up to |V|-1 rounds)."""
         w = (
             F.col(weight_col)
             if weight_col is not None
             else F.lit(1.0)
         )
         e = self.edges.select("s", "d", w.cast("double").alias("_w"))
-        dist = sources.select(
-            F.col("v"), F.lit(0.0).alias("dist")
-        ).transform(self._cp)
-        for _ in range(max_iter):
-            cand = (
+        dist = self._cut(
+            sources.select(F.col("v"), F.lit(0.0).alias("dist")), eager=True
+        )
+
+        def _round(dist, r):
+            cand = self._cut(
                 e.join(dist, e.s == dist.v)
                 .select(F.col("d").alias("v"), (F.col("dist") + F.col("_w")).alias("dist"))
                 .union(dist)
                 .groupBy("v")
-                .agg(F.min("dist").alias("dist"))
-                .transform(self._cp)
+                .agg(F.min("dist").alias("dist")),
+                eager=True,
             )
             improved = (
                 cand.alias("c")
@@ -1442,13 +1400,10 @@ class Graph:
                 )
                 .count()
             )
-            dist = cand
-            if improved == 0:
-                return dist
-        raise RuntimeError(
-            f"shortest_paths: still improving after max_iter={max_iter}"
-            " rounds — raise max_iter (needs up to |V|-1 on a path graph)"
-        )
+            return cand, improved == 0, improved
+
+        dist, _ = self._fixpoint("shortest_paths", _round, dist, max_iter)
+        return dist
 
     def compact_chains(
         self,
@@ -1461,7 +1416,9 @@ class Graph:
         chain-union graph (every vertex in/out-degree ≤ 1); path
         lengths double each round, so convergence is O(log
         longest-chain) shuffles instead of O(length) — the difference
-        that matters at 100 TB.
+        that matters at 100 TB. A chain longer than 2^max_iter raises;
+        a pure cycle (no start vertex, so no output row) may run to
+        max_iter.
 
         `with_paths=True` additionally carries the merged vertex label
         ('-'-joined ids, the assembly analog of concatenating read
@@ -1476,15 +1433,20 @@ class Graph:
             if with_paths
             else []
         )
-        p = self.edges.select(
-            F.col("s").alias("v"),
-            F.col("d").alias("end"),
-            F.lit(1).alias("dist"),
-            *lab0,
-        ).transform(self._cp_lazy)
-        rounds = 0
-        for _ in range(max_iter):
-            rounds += 1
+        p = self._cut(
+            self.edges.select(
+                F.col("s").alias("v"),
+                F.col("d").alias("end"),
+                F.lit(1).alias("dist"),
+                *lab0,
+            ),
+            eager=False,
+        )
+        starts = self.edges.select(F.col("s").alias("v")).subtract(
+            self.edges.select(F.col("d").alias("v"))
+        )
+
+        def _round(p, r):
             a, b = p.alias("a"), p.alias("b")
             lab = (
                 [
@@ -1495,39 +1457,40 @@ class Graph:
                 if with_paths
                 else []
             )
-            p = (
-                a.join(b, F.col("a.end") == F.col("b.v"), "left")
-                .select(
+            p = self._cut(
+                a.join(b, F.col("a.end") == F.col("b.v"), "left").select(
                     F.col("a.v").alias("v"),
                     F.coalesce(F.col("b.end"), F.col("a.end")).alias("end"),
                     (
                         F.col("a.dist") + F.coalesce(F.col("b.dist"), F.lit(0))
                     ).alias("dist"),
                     *lab,
-                )
-                .transform(self._cp_lazy)
+                ),
+                eager=False,
             )
             # the convergence agg materializes the lazy cut — one job
-            # per doubling round instead of two (r14). Cap-based test
-            # (r14, saves the confirm round the old sum-compare always
-            # paid): after k rounds dist = min(chain length from v,
-            # 2^k) (induction: a capped row's successor contributes
-            # min(L - 2^(k-1), 2^(k-1))), so max(dist) < 2^k means no
-            # row hit the cap — every chain already reached its end
-            # and the NEXT round would be the identity the old form
-            # ran just to see the total repeat. A cycle (in/out degree
-            # 1 everywhere, no chain end) pins max(dist) == 2^k
-            # forever and runs to max_iter, exactly like the old
-            # always-growing total; cycle rows drop at the `starts`
-            # semi-join either way.
+            # per doubling round. Cap-based test: after r rounds dist =
+            # min(chain length from v, 2^r) (induction: a capped row's
+            # successor contributes min(L - 2^(r-1), 2^(r-1))), so
+            # max(dist) < 2^r means no row hit the cap — every chain
+            # already reached its end and the NEXT round would be the
+            # identity. A cycle (in/out degree 1 everywhere, no chain
+            # end) pins max(dist) == 2^r forever; its rows drop at the
+            # `starts` semi-join below.
             mx = p.agg(F.max("dist")).collect()[0][0]
-            if mx is None or mx < (1 << rounds):
-                break
-        if stats is not None:
-            stats["rounds"] = rounds
-        starts = self.edges.select(F.col("s").alias("v")).subtract(
-            self.edges.select(F.col("d").alias("v"))
-        )
+            done = mx is None or mx < (1 << r)
+            if not done and r == max_iter:
+                # at the cap only cycles may still be capped: a chain is
+                # unfinished iff its start row's `end` still has a
+                # successor row (one extra job, at the cap only)
+                done = (
+                    p.join(starts, "v", "left_semi")
+                    .join(p.select(F.col("v").alias("end")), "end", "left_semi")
+                    .isEmpty()
+                )
+            return p, done, mx
+
+        p, _ = self._fixpoint("compact_chains", _round, p, max_iter, stats)
         path = (
             [F.concat(F.col("lab"), F.col("end").cast("string")).alias("path")]
             if with_paths
@@ -1570,25 +1533,25 @@ class Graph:
         Per round: one equi-join edges⋈labels (shuffle on the label
         key), one (v, lab) count aggregation, one per-vertex window for
         the argmax — all partitioned by vertex, no driver data motion.
-        localCheckpoint per round cuts the lineage (SURVEY §4.3).
+        A checkpoint per round cuts the lineage (SURVEY §4.3).
         """
         from pyspark.sql.window import Window
 
-        # one derivation (r14): _sym_edges + labels drawn from the
-        # CHECKPOINTED sym blocks (every vertex appears as sym.s) —
-        # the old union + vertex_ids() pair ran the upstream edge
-        # derivation four times before round 1 (the qg4 finding)
+        # one derivation: _sym_edges + labels drawn from the
+        # CHECKPOINTED sym blocks (every vertex appears as sym.s) — a
+        # union + vertex_ids() pair would run the upstream edge
+        # derivation four times before round 1
         sym = (
             self._sym_edges()
             .distinct()
             .repartition("d")
-            .transform(self._cp)
+            .transform(self._cut, eager=True)
         )
         labels = (
             sym.select(F.col("s").alias("v"))
             .distinct()
             .select("v", F.col("v").alias("lab"))
-            .transform(self._cp)
+            .transform(self._cut, eager=True)
         )
         w = Window.partitionBy("v").orderBy(F.desc("cnt"), F.asc("lab"))
         for _ in range(n_rounds):
@@ -1610,7 +1573,7 @@ class Graph:
                 .select(
                     "v", F.coalesce(F.col("lab"), F.col("_old")).alias("lab")
                 )
-                .transform(self._cp)
+                .transform(self._cut, eager=True)
             )
         return labels
 
@@ -1623,8 +1586,9 @@ class Graph:
         """Kahn-peel topological levels over a DIRECTED ACYCLIC edge
         set → (v, level), level = LONGEST path from any source (a
         vertex peels only once all predecessors have peeled). Raises
-        on a cycle — a partial level assignment is not a topological
-        order. Rounds = DAG depth (structural, not data-sized: the
+        ValueError on a cycle — a partial level assignment is not a
+        topological order — and RuntimeError when the depth exceeds
+        max_iter. Rounds = DAG depth (structural, not data-sized: the
         overlap graph's depth is reads-per-document, flat across sf —
         SCALE.md).
 
@@ -1637,63 +1601,53 @@ class Graph:
         beats both the checkpoint-everything form (driver-job bound)
         and the fully-lazy form (which recomputed each peel's
         anti-join three times) — measured at sf0.1. Peels past
-        exhaustion inside a block emit empty frames — harmless, and
-        the block boundary re-checks convergence/cycle exactly as
-        before."""
-        remaining = self.edges.select("s", "d").transform(self._cp)
+        exhaustion inside a block emit empty frames — harmless; the
+        block boundary checks convergence and cycles."""
+        remaining = self._cut(self.edges.select("s", "d"), eager=True)
         # verts from the CHECKPOINTED blocks (remaining is the
         # unfiltered edge set, so its endpoints ARE the vertex set) —
-        # one upstream derivation instead of two (r14)
-        verts = (
-            remaining.select(F.explode(F.array("s", "d")).alias("v"))
-            .distinct()
-            .transform(self._cp)
+        # one upstream derivation instead of two
+        verts = self._cut(
+            remaining.select(F.explode(F.array("s", "d")).alias("v")).distinct(),
+            eager=True,
         )
-        out: DataFrame | None = None
-        level = 0
-        while level < max_iter:
-            block_out: DataFrame | None = None
-            for _ in range(min(block, max_iter - level)):
-                targets = remaining.select(F.col("d").alias("v")).distinct()
-                zero = verts.join(targets, "v", "left_anti").transform(self._cp)
-                lv = zero.select("v", F.lit(level).alias("level"))
-                block_out = (
-                    lv if block_out is None else block_out.unionByName(lv)
-                )
-                remaining = remaining.join(
-                    zero.withColumnRenamed("v", "s"), "s", "left_anti"
-                )
-                verts = verts.join(zero, "v", "left_anti")
-                level += 1
-            block_out = block_out.transform(self._cp)
-            remaining = remaining.transform(self._cp)
-            verts = verts.transform(self._cp)
-            emitted = block_out.count()
-            out = (
-                block_out
-                if out is None
-                else out.unionByName(block_out)
+
+        def _peel(state, r):
+            remaining, verts, out, block_out = state
+            targets = remaining.select(F.col("d").alias("v")).distinct()
+            zero = self._cut(verts.join(targets, "v", "left_anti"), eager=True)
+            lv = zero.select("v", F.lit(r - 1).alias("level"))
+            block_out = lv if block_out is None else block_out.unionByName(lv)
+            remaining = remaining.join(
+                zero.withColumnRenamed("v", "s"), "s", "left_anti"
             )
-            if emitted == 0 or verts.count() == 0:
-                if remaining.count() > 0 and emitted == 0:
-                    raise ValueError(
-                        "topological_levels: cycle detected — "
-                        f"{remaining.count()} edges undissolvable"
-                    )
-                if stats is not None:
-                    # level is rounded up to the block boundary; the
-                    # true depth is the deepest emitted level + 1, and
-                    # 0 for an empty graph (max(level) is NULL then —
-                    # the old `or 0` collapsed that to depth 1,
-                    # ADVICE r06)
-                    deepest = out.agg(F.max("level")).collect()[0][0]
-                    stats["depth"] = (
-                        (deepest + 1) if deepest is not None else 0
-                    )
-                return out
-        raise RuntimeError(
-            f"topological_levels: depth exceeds max_iter={max_iter}"
+            verts = verts.join(zero, "v", "left_anti")
+            if r % block and r != max_iter:
+                return (remaining, verts, out, block_out), False, None
+            block_out = self._cut(block_out, eager=True)
+            remaining = self._cut(remaining, eager=True)
+            verts = self._cut(verts, eager=True)
+            emitted = block_out.count()
+            out = block_out if out is None else out.unionByName(block_out)
+            done = emitted == 0 or verts.count() == 0
+            if done and emitted == 0 and remaining.count() > 0:
+                raise ValueError(
+                    "topological_levels: cycle detected — "
+                    f"{remaining.count()} edges undissolvable"
+                )
+            return (remaining, verts, out, None), done, emitted
+
+        (_, _, out, _), _ = self._fixpoint(
+            "topological_levels", _peel, (remaining, verts, None, None),
+            max_iter,
         )
+        if stats is not None:
+            # the loop stops on a block boundary; the true depth is the
+            # deepest emitted level + 1, and 0 for an empty graph
+            # (max(level) is NULL then)
+            deepest = out.agg(F.max("level")).collect()[0][0]
+            stats["depth"] = (deepest + 1) if deepest is not None else 0
+        return out
 
     def local_clustering(self) -> DataFrame:
         """Per-vertex local clustering coefficient → (v, degree, coef):
@@ -1705,37 +1659,20 @@ class Graph:
         count. Two equi-join shuffles + two groupBys, candidate wedges
         bounded by per-vertex degree exactly like the 2-hop operator.
         """
-        # lazy cut (r14): tri's three join sides + degrees() would
-        # otherwise each re-derive the full upstream edge subplan
-        # (four derivations for one coefficient — the qg3 finding);
-        # with the cut everything reads one materialized edge set
-        e = self.edges.transform(self._cp_lazy)
-        g = Graph(e, reliable_checkpoint_dir=self.reliable_checkpoint_dir)
-        e1 = e.alias("e1")
-        e2 = e.alias("e2")
-        e3 = e.alias("e3")
-        tri = (
-            e1.join(e2, F.col("e1.d") == F.col("e2.s"))
-            .join(
-                e3,
-                (F.col("e1.s") == F.col("e3.s"))
-                & (F.col("e2.d") == F.col("e3.d")),
-            )
-            .select(
-                F.col("e1.s").alias("a"),
-                F.col("e1.d").alias("b"),
-                F.col("e2.d").alias("c"),
-            )
-        )
+        # lazy cut: tri's three join sides + degrees() would otherwise
+        # each re-derive the full upstream edge subplan (four
+        # derivations for one coefficient); with the cut everything
+        # reads one materialized edge set
+        e = self._cut(self.edges, eager=False)
         per_v = (
-            tri.select(
+            self._triangles(e).select(
                 F.explode(F.array("a", "b", "c")).alias("v")
             )
             .groupBy("v")
             .agg(F.count("*").alias("t"))
         )
         return (
-            g.degrees()
+            replace(self, edges=e).degrees()
             .join(per_v, "v", "left")
             .select(
                 "v",
@@ -1766,27 +1703,30 @@ class Graph:
         edges join the forest, and touched components contract.
         O(log V) rounds since components at least halve; per round two
         comp-label joins + one min_by aggregation, with the
-        contraction itself a component-GRAPH-sized CC (second-order
-        small). The standard scalable MST: no global edge sort, no
+        contraction itself a component-GRAPH-sized two-phase CC
+        (second-order small). The standard scalable MST: no global edge sort, no
         union-find, every step a join or aggregation."""
-        e = self.edges.select(
-            F.least("s", "d").alias("s"),
-            F.greatest("s", "d").alias("d"),
-            F.col(weight_col).alias("w"),
-        ).transform(self._cp)
+        e = self._cut(
+            self.edges.select(
+                F.least("s", "d").alias("s"),
+                F.greatest("s", "d").alias("d"),
+                F.col(weight_col).alias("w"),
+            ),
+            eager=True,
+        )
         # comp from the CHECKPOINTED canonical edges: least/greatest
         # keeps every endpoint (self-loops fold to (x, x)), so the
         # exploded ends are exactly the vertex set — one upstream
-        # derivation instead of two (r14)
-        comp = (
+        # derivation instead of two
+        comp = self._cut(
             e.select(F.explode(F.array("s", "d")).alias("v"))
             .distinct()
-            .select("v", F.col("v").alias("c"))
-            .transform(self._cp)
+            .select("v", F.col("v").alias("c")),
+            eager=True,
         )
-        forest: DataFrame | None = None
-        rounds = 0
-        for _ in range(max_iter):
+
+        def _round(state, r):
+            comp, forest = state
             cs = comp.select(F.col("v").alias("s"), F.col("c").alias("cs"))
             cd = comp.select(F.col("v").alias("d"), F.col("c").alias("cd"))
             lab = (
@@ -1798,50 +1738,49 @@ class Graph:
             cand = lab.select(F.col("cs").alias("cc"), pick.alias("p")).union(
                 lab.select(F.col("cd").alias("cc"), pick.alias("p"))
             )
-            chosen = (
+            chosen = self._cut(
                 cand.groupBy("cc")
                 .agg(F.min("p").alias("p"))
                 .select("p.s", "p.d", "p.w", "p.cs", "p.cd")
-                .distinct()
-                .transform(self._cp)
+                .distinct(),
+                eager=True,
             )
-            rounds += 1
-            if chosen.count() == 0:
-                break
+            n_chosen = chosen.count()
+            if n_chosen == 0:
+                return state, True, 0
             picked = chosen.select("s", "d", "w")
-            forest = (
+            forest = self._cut(
                 picked
                 if forest is None
-                else forest.unionByName(picked).distinct()
+                else forest.unionByName(picked).distinct(),
+                eager=True,
             )
-            forest = forest.transform(self._cp)
             # contract: CC over the (cs, cd) merge graph — component-
-            # count sized, shrinks >= 2x per round
-            merge = Graph(
-                chosen.select(
-                    F.col("cs").alias("s"), F.col("cd").alias("d")
-                ),
-                reliable_checkpoint_dir=self.reliable_checkpoint_dir,
-            ).connected_components()
-            comp = (
+            # count sized, shrinks >= 2x per round. Its trees can be
+            # long paths (a path with rising weights merges whole in
+            # round 1), so the O(log n)-round CC, not min-label's
+            # O(diameter)
+            merge = replace(
+                self,
+                edges=chosen.select(F.col("cs").alias("s"), F.col("cd").alias("d")),
+            ).connected_components_twophase()
+            comp = self._cut(
                 comp.join(
                     merge.select(
                         F.col("v").alias("c"), F.col("component").alias("_nc")
                     ),
                     "c",
                     "left",
-                )
-                .select(
+                ).select(
                     "v", F.coalesce(F.col("_nc"), F.col("c")).alias("c")
-                )
-                .transform(self._cp)
+                ),
+                eager=True,
             )
-        else:
-            raise RuntimeError(
-                f"minimum_spanning_forest: not converged in {max_iter}"
-            )
-        if stats is not None:
-            stats["rounds"] = rounds
+            return (comp, forest), False, n_chosen
+
+        (_, forest), _ = self._fixpoint(
+            "minimum_spanning_forest", _round, (comp, None), max_iter, stats
+        )
         if forest is None:
             return e.limit(0)
         return forest

@@ -525,7 +525,7 @@ def qg11b_reduce_to_fixpoint(spark, sf_dir):
 def _trim_round_sql(prev: str, i: int) -> str:
     """One tip-trim-ONLY round as MATERIALIZED DuckDB CTEs. Valid as
     the full-round oracle twin for rounds >= 2 of reduce_pipeline by
-    the round-1-only-transitive proof (graph/graph.py:426): edge
+    the round-1-only-transitive proof (Graph.reduce_pipeline): edge
     removal never creates a 2-path, so the transitive stage is the
     identity from round 2 on and the oracle may skip it — which is
     what makes the FULL-graph qg12 oracle affordable (one 2-path join
@@ -556,9 +556,10 @@ def _reduce_full_oracle_sql(max_iter: int = 5) -> str:
     - rounds k >= 2 detect via c_k == c_(k-1) and append the previous
       count (equal values, so the string matches either way);
     - no convergence within the unroll <=> the Spark loop also ran all
-      max_iter rounds (unroll == max_iter), so COALESCE(det, max_iter)
-      reproduces the cap with NO sf calibration requirement — unlike
-      the qg11b-family unrolls, this oracle is exact at ANY sf.
+      max_iter rounds (unroll == max_iter) and raises (Graph._fixpoint);
+      COALESCE(det, max_iter) keeps the SQL total, and the unroll needs
+      NO sf calibration — unlike the qg11b-family unrolls, this oracle
+      is exact at ANY sf where the loop converges.
 
     Verified value-identical to the Spark summary at sf0.001
     (rounds=2, [8899, 404, 404]), sf0.01 (rounds=1, [115729, 19925])

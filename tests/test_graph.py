@@ -5,6 +5,9 @@ fixture-derived graphs; these pin the algorithms themselves).
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from sora_spark.catalog import tables
@@ -198,9 +201,9 @@ def test_compact_chains(spark):
 
 
 def test_compact_chains_cap_convergence(spark):
-    """The r14 cap-based convergence test (stop when max(dist) < 2^k,
+    """The cap-based convergence test (stop when max(dist) < 2^k,
     i.e. no row hit the doubling cap) must be exact on the cases where
-    it differs most from the old sum-compare: a chain of length
+    it differs most from a sum-compare: a chain of length
     EXACTLY a power of two (dist == cap at the converged round, so one
     more round must run before the break), a cycle (dist pinned at
     the cap forever — rows drop at the starts semi-join, loop bounded
@@ -227,6 +230,19 @@ def test_compact_chains_cap_convergence(spark):
         for r in g.compact_chains(max_iter=8, with_paths=True).collect()
     }
     assert paths == {"1-2-3-4-5", "10-11-12-13", "20-21"}
+
+    # the same graph at the DEFAULT max_iter: the cycle keeps the loop
+    # doubling for all 30 rounds over a self-joined cut frame, whose
+    # size estimate squares every round (planning takes minutes past
+    # round 20) unless the cut drops it. Reaching the cap with only
+    # the cycle still capped is a valid ending, not an exhaustion.
+    st30: dict = {}
+    chains30 = {
+        (r["start"], r["end"], r["length"])
+        for r in g.compact_chains(stats=st30).collect()
+    }
+    assert chains30 == {(1, 5, 4), (10, 13, 3), (20, 21, 1)}
+    assert st30["rounds"] == 30, st30
 
     # acyclic, longest chain EXACTLY 2^2: dist == cap at the converged
     # round, so round 3 must still run (max 4 < 8 breaks) — the cap
@@ -300,18 +316,75 @@ def test_twophase_cc_on_long_chain(spark):
     assert stats["rounds"] <= 8, f"not logarithmic: {stats['rounds']} rounds"
 
 
-def test_twophase_cc_raises_on_exhausted_iterations(spark):
-    """Loop exhaustion without reaching the star-forest fixpoint is
-    loud (RuntimeError), never silently-wrong labels."""
-    import pytest
+def _path(spark, n, weighted=False):
+    rows = [(i, i + 1, float(i)) for i in range(n - 1)]
+    if weighted:
+        return Graph(spark.createDataFrame(rows, "s long, d long, w double"))
+    return _g(spark, [r[:2] for r in rows])
 
-    from sora_spark.graph import Graph
 
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(63)], "s BIGINT, d BIGINT"
-    )
-    with pytest.raises(RuntimeError, match="fixpoint"):
-        Graph(edges).connected_components_twophase(max_iter=1)
+# (op, call) pairs: every convergence loop on a path- or chain-shaped
+# input whose fixpoint lies beyond the given max_iter
+_EXHAUSTED = {
+    # diameter 80 > 10 rounds: a partial labeling splits the path
+    "connected_components": lambda sp: _path(sp, 81).connected_components(
+        max_iter=10
+    ),
+    "connected_components_twophase": lambda sp: _path(
+        sp, 64
+    ).connected_components_twophase(max_iter=1),
+    # hub_degree=2 trims both path ends per round: ~n/2 rounds
+    "reduce_pipeline": lambda sp: _path(sp, 20).reduce_pipeline(
+        max_iter=2, hub_degree=2
+    ),
+    # a chain of diamonds: no tips (reduce converges in round 1), one
+    # bubble per diamond, so the bubble loop needs a confirm round
+    "assembly_pipeline (bubble loop)": lambda sp: _g(
+        sp,
+        [e for i in range(0, 9, 3)
+         for e in [(i, i + 1), (i, i + 2), (i + 1, i + 3), (i + 2, i + 3)]],
+    ).assembly_pipeline(max_iter=1),
+    "k_core": lambda sp: _path(sp, 20).k_core(k=2, max_iter=3),
+    "maximal_matching": lambda sp: _path(sp, 40).maximal_matching(
+        max_iter=1
+    ),
+    # three 2-cycles in a row, one SCC peeled per outer round
+    "strongly_connected_components": lambda sp: _g(
+        sp, [(1, 2), (2, 1), (2, 3), (3, 4), (4, 3), (4, 5), (5, 6), (6, 5)]
+    ).strongly_connected_components(max_iter=2),
+    "k_truss": lambda sp: _path(sp, 10).k_truss(k=3, max_iter=1),
+    "shortest_paths": lambda sp: _path(sp, 10).shortest_paths(
+        sp.createDataFrame([(0,)], "v long"), max_iter=3
+    ),
+    # chain length 19 > 2^3
+    "compact_chains": lambda sp: _path(sp, 20).compact_chains(max_iter=3),
+    "minimum_spanning_forest": lambda sp: _path(
+        sp, 16, weighted=True
+    ).minimum_spanning_forest(max_iter=1),
+    "topological_levels": lambda sp: _path(sp, 10).topological_levels(
+        max_iter=3
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_EXHAUSTED))
+def test_fixpoint_raises_on_exhausted_iterations(spark, op):
+    """Every convergence loop runs on Graph._fixpoint: exhausting
+    max_iter short of the fixpoint is loud (RuntimeError naming the op
+    and max_iter), never a silently partial answer."""
+    with pytest.raises(
+        RuntimeError, match=rf"^{re.escape(op)}: no fixpoint after max_iter=\d+ "
+    ):
+        _EXHAUSTED[op](spark)
+
+
+def test_msf_contracts_long_merge_chains(spark):
+    """A path with rising weights merges whole in Borůvka round 1, so
+    the contraction CC sees a 120-vertex path: its round count must
+    not be bounded by the merge graph's diameter."""
+    st: dict = {}
+    forest = _path(spark, 120, weighted=True).minimum_spanning_forest(stats=st)
+    assert forest.count() == 119 and st["rounds"] == 2, st
 
 
 def test_twophase_matches_minlabel(spark, sf_dir):
