@@ -394,13 +394,10 @@ def near_dup_clusters(
     wall time at sf0.1; the B12 bench row now guards this). Resolution
     is _resolve_components: a driver-side union-find over the
     collected pair list up to its 5M-pair bound (zero Spark rounds —
-    the pair graph is radically smaller than the corpus), with
-    distributed min-label propagation above the bound; LSH components
-    are bucket-bounded with tiny diameter BY CONSTRUCTION (every
-    member pair shares a band bucket), so the fallback converges in
-    ~2 rounds where the O(log n) contraction pays its per-round
-    constant for nothing. Docs with no near-dup are their
-    own singleton cluster (cluster_id = doc_id).
+    the pair graph is radically smaller than the corpus), with the
+    distributed two-phase connected components above the bound. Docs
+    with no near-dup are their own singleton cluster (cluster_id =
+    doc_id).
 
     EDGES ARE STARS, NOT CLIQUES (r15, the VERDICT-item-4 skew bound,
     solved structurally instead of by salting): connected components
@@ -461,14 +458,18 @@ def _resolve_components(pairs: DataFrame) -> DataFrame:
     collected edge list + a broadcast mapping join back — zero
     iterative Spark rounds, which on bucket-sized components were
     pure fixed overhead (the B12 bench finding). Beyond the bound it
-    falls back to the distributed min-label propagation, which is the
-    same answer in O(diameter) rounds. Both paths emit rows only for
-    vertices that appear in a pair; callers coalesce singletons."""
+    falls back to the distributed two-phase connected components
+    (`Graph.connected_components_twophase`), the same min-id labels in
+    O(log n) rounds whatever the component's diameter: chains of
+    overlapping buckets (a≈b, b≈c, …) make that diameter unbounded,
+    and min-label propagation, which needs one round per hop, raises
+    past its max_iter on them. Both paths emit rows only for vertices
+    that appear in a pair; callers coalesce singletons."""
     n_pairs = pairs.count()  # materializes the caller's lazy checkpoint
     if n_pairs > _DRIVER_UF_MAX_PAIRS:
         from sora_spark.graph import Graph
 
-        return Graph(pairs).connected_components()
+        return Graph(pairs).connected_components_twophase()
     import pandas as pd
 
     # Arrow transfer + factorized ids: numpy code arrays and a flat

@@ -5,6 +5,7 @@ superset property, SimHash fast path, multimodal plumbing, exact dedup.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sora_spark.catalog import tables
@@ -1041,23 +1042,31 @@ def test_neardup_clusters_string_ids(spark):
 
 
 def test_neardup_distributed_fallback_equivalence(spark, sf_dir, monkeypatch):
-    """The hybrid's both branches, one answer (VERDICT r08 watch item):
-    forcing `_DRIVER_UF_MAX_PAIRS` to 0 routes every pair set through
-    the distributed min-label-propagation fallback, which must produce
-    the exact (doc_id, cluster_id, is_canonical) set the driver
-    union-find produces on the real corpus. This is the correctness
+    """The hybrid's both branches, one answer: forcing
+    `_DRIVER_UF_MAX_PAIRS` to 0 routes every pair set through the
+    distributed two-phase CC fallback, which must produce the exact
+    (doc_id, cluster_id, is_canonical) set the driver union-find
+    produces on the real corpus, and the union-find's labels on an
+    80-pair chain — a component whose diameter (80) is past
+    min-label propagation's max_iter. This is the correctness
     certificate for the >5M-pair regime that no test-scale corpus can
     reach by size alone."""
     from sora_spark.llm import dedup
 
     docs = tables(spark, sf_dir).documents
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(80)], "s BIGINT, d BIGINT")
     uf = set(map(tuple, dedup.near_dup_clusters(docs).collect()))
+    uf_chain = set(map(tuple, dedup._resolve_components(chain).collect()))
+    assert uf_chain == {(v, 0) for v in range(81)}
     monkeypatch.setattr(dedup, "_DRIVER_UF_MAX_PAIRS", 0)
     dist = set(map(tuple, dedup.near_dup_clusters(docs).collect()))
     assert uf == dist
     # the corpus actually has near-dup structure: some non-singleton
     # cluster exists, so the two paths agreed on real merges
     assert any(not r[2] for r in uf)
+    assert set(map(tuple, dedup._resolve_components(chain).collect())) \
+        == uf_chain
 
 
 def test_range_search_vectorized_bounds(spark, sf_dir, monkeypatch):
@@ -1880,6 +1889,57 @@ def test_ivfpq_incremental_append(spark, tmp_path):
     got = {(r["probe_id"], r["neighbor_id"], r["sim"])
            for r in got_df.collect()}
     assert got == exact
+
+
+@pytest.mark.parametrize("kind", ["ivf", "ivfpq"])
+def test_indexed_probe_uses_stored_cids(spark, tmp_path, kind):
+    """Both indexed probes map a list's sort position to its STORED
+    cid from the one codebook read, on the partial and the exhaustive
+    path alike: renumbering a flat 16-list index's cids to 10·c (the
+    `_cid=` directories and `_centroids` both) leaves partial
+    (n_probe=2) and exhaustive results exactly as they were."""
+    import os
+
+    emb = _clustered_emb(spark)
+    probes = emb.filter(F.col("vec_id") % 10 == 0)
+    path = str(tmp_path / kind)
+    if kind == "ivf":
+        ann.write_ivf_index(emb, path, n_centroids=16, iters=2)
+
+        def probe(n):
+            return ann.ivf_topk_indexed(spark, path, probes, k=10, n_probe=n)
+    else:
+        ann.write_ivfpq_index(emb, path, n_centroids=16, m_subs=4,
+                              n_codes=16, iters=2)
+
+        def probe(n):
+            return ann.ivfpq_topk_indexed(
+                spark, path, emb, probes, k=10, n_probe=n)
+
+    def results():
+        return [sorted(map(tuple, probe(n).collect())) for n in (2, 16)]
+
+    before = results()
+    assert len(before[0]) == len(before[1]) == 640
+    # descending, so 10·c never lands on a directory not yet renamed
+    for c in range(16, 0, -1):
+        os.rename(os.path.join(path, f"_cid={c}"),
+                  os.path.join(path, f"_cid={10 * c}"))
+    cents = spark.read.parquet(path + "_centroids")
+    rows = [(10 * r["cid"],) + tuple(r)[1:] for r in cents.collect()]
+    spark.createDataFrame(rows, cents.schema).coalesce(1).write.mode(
+        "overwrite").parquet(path + "_centroids")
+    assert results() == before
+
+
+def test_ivfpq_probe_refuses_plain_ivf_index(spark, tmp_path):
+    """`ivfpq_topk_indexed` on an index without a `_pq` sidecar raises
+    before any probe work, however the probe would have routed."""
+    emb = _clustered_emb(spark)
+    path = str(tmp_path / "ivf")
+    ann.write_ivf_index(emb, path, n_centroids=4, iters=1)
+    with pytest.raises(ValueError, match="not an IVF-PQ index"):
+        ann.ivfpq_topk_indexed(spark, path, emb, emb.limit(2), k=3)
 
 
 def test_split_ivf_list(spark, tmp_path):

@@ -923,6 +923,36 @@ def test_ivf_indexed_probe_prunes_partitions(spark, sf_dir):
         shutil.rmtree(root, ignore_errors=True)
 
 
+@pytest.mark.parametrize("kind", ["ivf", "ivfpq"])
+def test_indexed_probe_floors_candidate_parallelism(
+    spark, sf_dir, tmp_path, kind
+):
+    """Both indexed probes run the candidate-parallelism floor: a
+    one-list index written from a one-partition corpus scans as a
+    single split, so without the floor all pair scoring would run in
+    one task. The probe plan must round-robin the candidates out to
+    defaultParallelism (results cannot move: every window orders its
+    ties by id)."""
+    from pyspark.sql import functions as F
+
+    from sora_spark.llm import ann
+    from sora_spark.queries.bench_core import tables
+
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("the floor is a no-op at defaultParallelism 1")
+    emb = tables(spark, sf_dir).embeddings
+    corpus = emb.coalesce(1)
+    probes = emb.filter(F.col("vec_id") < 3)
+    path = str(tmp_path / kind)
+    if kind == "ivf":
+        ann.write_ivf_index(corpus, path, n_centroids=1, iters=1)
+        df = ann.ivf_topk_indexed(spark, path, probes, k=3, n_probe=1)
+    else:
+        ann.write_ivfpq_index(corpus, path, n_centroids=1, iters=1)
+        df = ann.ivfpq_topk_indexed(spark, path, emb, probes, k=3, n_probe=1)
+    assert "RoundRobinPartitioning" in _plan_df(df), _plan_df(df)
+
+
 def _tree_subtrees(plan: str, node: str) -> list[str]:
     """Every `node` occurrence in a simple-mode plan tree, with its
     full subtree. Spark's text tree indents every descendant strictly
